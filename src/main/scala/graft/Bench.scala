@@ -84,9 +84,10 @@ object Bench {
     // frames, but running the whole suite can EVICT early entries; a frame
     // rebuilt at first touch lands its materialization on whichever timed
     // query reaches it first (q96 absorbed the shared edge frame in the
-    // round-8 artifact). Re-touch every registered cache so the timed
-    // passes measure plans, not cache (re)materialization.
-    val warmed = graft.queries.ExtQueries.warmCaches(spark)
+    // round-8 artifact). Re-touch every session cache entry so the timed
+    // passes measure plans, not cache (re)materialization; an entry that
+    // fails to build fails the run with its name.
+    val warmed = graft.queries.SessionCache.warm(spark)
     // Two timed views, because they answer different questions:
     //   - per-query seconds come from SEQUENTIAL passes (each query alone
     //     on the box) — the isolated steady-state plan cost, comparable
@@ -233,6 +234,10 @@ object Bench {
       case e: java.io.IOException =>
         System.err.println(s"WARN could not write BENCH_LATEST.json: $e")
     }
+    // per-entry session cache evidence (cached bytes, hits), ahead of the
+    // JSON lines
+    graft.queries.SessionCache.stats(spark).foreach(s =>
+      println(s"session_cache ${s.name} bytes=${s.bytes} hits=${s.hits}"))
     spark.stop()
     println(full)
     // adaptive final line: as many of the slowest queries as keep the line

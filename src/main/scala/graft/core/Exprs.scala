@@ -29,7 +29,7 @@ object Exprs {
     element_at(transform(array(value), body), 1)
 
   /** Bit-exact, allocation-free replacement for `round(x, 0).cast("long")`
-    * on a DoubleType column with |x| < 2^51 and finite (the exact-cents
+    * on a DoubleType column with |x| <= 2^53 and finite (the exact-cents
     * quantization idiom of the fact queries).
     *
     * Spark's Round on doubles evaluates
@@ -40,15 +40,18 @@ object Exprs {
     * 0 the identical value is `floor(|x| + 0.5)` with one carry correction:
     * when |x| lies within half an ulp BELOW a k.5 boundary, the FP addition
     * rounds up across it (floor then yields k+1 where HALF_UP yields k).
-    * The overshoot is detected by `(t − 0.5) > |x|`: t is an integer
-    * < 2^52, so t − 0.5 is exactly representable and the comparison is
-    * exact (a `t − |x| > 0.5` form is NOT — the subtraction re-rounds just
-    * outside the Sterbenz range, e.g. at |x| = nextDown(0.5)). The
+    * The overshoot is detected by `(t − 0.5) > |x|`: for t <= 2^52,
+    * t − 0.5 is exactly representable and the comparison is exact (a
+    * `t − |x| > 0.5` form is NOT — the subtraction re-rounds just outside
+    * the Sterbenz range, e.g. at |x| = nextDown(0.5)). Above 2^52 every
+    * double is an integer: `|x| + 0.5` and `t − 0.5` both tie to even, so
+    * t is |x| or |x| + 1 and the check takes the overshoot back. The
     * shortest-repr subtlety of Double.toString cannot flip a boundary:
-    * every k.5 with k < 2^51 is exactly representable, so a double
+    * every k.5 with k < 2^52 is exactly representable, so a double
     * strictly below it prints strictly below it. HALF_UP rounds negatives
     * away from zero, hence the sign peel. Equality to `round(x, 0)` is
-    * property-tested on boundary and random vectors (ExprsRoundSpec).
+    * property-tested on boundary and random vectors up to 2^53
+    * (ExprsRoundSpec).
     */
   def roundHalfUpLong(x: Column): Column = {
     val a = abs(x)

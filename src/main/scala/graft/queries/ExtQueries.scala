@@ -14,46 +14,14 @@ import graft.ext.{Dedup, Events, Similarity, Sketches, TextStats}
   */
 object ExtQueries {
 
-  // cached per (session, sf) like the returns derivation — several queries
-  // re-read each table
-  private val tableCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-  private[queries] def cached(spark: SparkSession, sfDir: String, name: String)(
-      build: => DataFrame): DataFrame =
-    tableCache.getOrElseUpdate((spark, sfDir, name), build.cache())
-  /** Re-materialize every shared cached frame registered for `spark` and
-    * return how many were touched. Bench calls this BETWEEN its untimed
-    * warm-up and the timed passes: the warm-up populates the caches, but
-    * the churn of running every query can evict earlier entries, and a
-    * rebuilt-at-first-touch frame then lands its materialization cost on
-    * whichever TIMED query reaches it first (q96 absorbed the shared edge
-    * frame in the round-8 artifact) — muddying per-query attribution.
-    * Touching each frame here makes the timed numbers measure plans.
-    */
-  private[graft] def warmCaches(spark: SparkSession): Int = {
-    val mine = tableCache.collect { case ((s, _, _), df) if s eq spark => df }
-    mine.foreach(df => try df.count() catch { case _: Throwable => () })
-    mine.size
-  }
-
-  // non-DataFrame reusable artifacts (e.g. a benchmark Bloom filter)
-  private val artifactCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), AnyRef]
-  private def cachedArtifact[T <: AnyRef](spark: SparkSession, sfDir: String,
-      name: String)(build: => T): T =
-    artifactCache.getOrElseUpdate((spark, sfDir, name), build).asInstanceOf[T]
-
-  /** r13 note (optimization guide §2.5): the fixture tables are
-    * single-row-group parquet files, so every scan is ONE partition and a
-    * consumer's first stage runs single-threaded until its first exchange.
-    * A blanket round-robin repartition of these base caches to the session
-    * shuffle width was A/B-measured on the FULL suite and REJECTED:
-    * heavy first stages won big (q225 4.6→1.4 s, q102 −0.5 s) but ~30
-    * small events/docs queries each lost 0.3–0.6 s to 32-way task
-    * scheduling over tiny cached frames — suite total 137.5→150.5 s.
-    * Parallelism is instead injected at the specific heavy expansion
-    * points that need it (see [[sessionParallelism]] users, e.g. q225's
-    * candidate explode), where the per-stage work dwarfs task overhead.
+  /** The fixture tables are single-row-group parquet files, so every scan
+    * is ONE partition and a consumer's first stage runs single-threaded
+    * until its first exchange. A blanket round-robin repartition of the base
+    * tables to the session width was A/B-measured on the full suite and
+    * rejected (suite 137.5→150.5 s: ~30 small events/docs queries each lost
+    * 0.3–0.6 s to task scheduling, more than q225/q102 won). Parallelism is
+    * instead injected where a heavy expansion dwarfs task overhead (e.g.
+    * q225's candidate explode).
     */
   private[queries] def sessionParallelism(spark: SparkSession): Int =
     spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
@@ -75,19 +43,28 @@ object ExtQueries {
   /** A/B toggle (tools/AbOverlap, round-13 verdict item 9): when the
     * session conf `graft.queries.sequentialCheckpoints` is "true", the
     * queries that normally submit independent eager checkpoint builds from
-    * a thread pool (q216/q218/q240) run them inline instead, so the
-    * overlap's worth is measurable on demand. Defaults to concurrent.
+    * a thread pool (q218/q240; q216 always builds inline) run them inline
+    * instead, so the overlap's worth is measurable on demand. Defaults to
+    * concurrent.
     */
   private[queries] def sequentialCheckpoints(spark: SparkSession): Boolean =
     try spark.conf.get("graft.queries.sequentialCheckpoints", "false") == "true"
     catch { case _: Exception => false }
 
+  /** A base table, read as is. Base tables stay out of [[SessionCache]]
+    * unless their reuse is measured to pay: a cached whole table is an
+    * InMemoryRelation that Spark substitutes into every matching scan of the
+    * session, which drops column pruning and filter pushdown for every other
+    * query of that table, and `documents` is only scanned to derive cached
+    * entries. `embeddings` and `events` pay: read from parquet, their 23 and
+    * 56 consumers took 29 % and 26 % longer at sf0.1 (Bench, min of 2 runs).
+    */
+  private[queries] def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    spark.read.parquet(s"$sfDir/$name.parquet")
   private[queries] def docs(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "documents")(
-      spark.read.parquet(s"$sfDir/documents.parquet"))
+    table(spark, sfDir, "documents")
   private[queries] def emb(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "embeddings")(
-      spark.read.parquet(s"$sfDir/embeddings.parquet"))
+    SessionCache.frame(spark, sfDir, "embeddings")(table(spark, sfDir, "embeddings"))
   /** events.parquet's `ts` physical type has varied across driver testdata
     * generations: TIMESTAMP(NANOS) (Spark reads it as long under
     * spark.sql.legacy.parquet.nanosAsLong=true — truncated to microsecond
@@ -99,8 +76,8 @@ object ExtQueries {
     * matches DuckDB's naive-timestamp epoch math bit-for-bit.
     */
   private[queries] def events(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "events")(
-      Events.normalizeTs(spark.read.parquet(s"$sfDir/events.parquet")))
+    SessionCache.frame(spark, sfDir, "events")(
+      Events.normalizeTs(table(spark, sfDir, "events")))
 
   /** Per-(doc, token) counts with the doc's source and lang attached — the
     * shared first stage of the text-analytics family (entropy q48, Zipf q49,
@@ -111,10 +88,22 @@ object ExtQueries {
     * dependent on doc_id, so including them in the grouping changes nothing.
     */
   private[queries] def tokenCounts(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "token_counts")(
+    SessionCache.frame(spark, sfDir, "token_counts")(
       docs(spark, sfDir).select(col("doc_id"), col("source"), col("lang"),
         explode(TextStats.tokens(lower(col("text")))).as("t"))
         .groupBy("doc_id", "source", "lang", "t").agg(count(lit(1)).as("c")))
+
+  /** Per-doc 3-shingle sets: the shared per-row stage of the Jaccard family
+    * (q18 verification, containment, decontamination, curation, q95).
+    */
+  private[queries] def shingleSets(spark: SparkSession, sfDir: String): DataFrame =
+    SessionCache.frame(spark, sfDir, "shingle_sets")(
+      Dedup.shingleSets(docs(spark, sfDir), "doc_id", "text", shingleSize = 3))
+
+  /** Per-doc portable simhashes (md5-derived, recomputable by the oracle). */
+  private[queries] def simhashes(spark: SparkSession, sfDir: String): DataFrame =
+    SessionCache.frame(spark, sfDir, "simhash_portable")(
+      Dedup.simhashPortable(docs(spark, sfDir), "doc_id", "text"))
 
   // ---- q14 exact dedup -----------------------------------------------------
 
@@ -237,11 +226,10 @@ object ExtQueries {
     // the two per-row stages (signatures, shingle sets) are cached per
     // (session, sf) like q19's simhash — repeat runs pay only the candidate
     // join + exact verification
-    val sig = cached(spark, sfDir, "minhash_sigs")(
+    val sig = SessionCache.frame(spark, sfDir, "minhash_sigs")(
       Dedup.minhashSignatures(docs(spark, sfDir), "doc_id", "text",
         numHashes = 32, shingleSize = 3))
-    val sets = cached(spark, sfDir, "shingle_sets")(
-      Dedup.shingleSets(docs(spark, sfDir), "doc_id", "text", shingleSize = 3))
+    val sets = shingleSets(spark, sfDir)
     Dedup.nearDuplicatePairsFromSignatures(sig, sets,
       threshold = 0.5, numHashes = 32, bands = 16)
       .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
@@ -294,9 +282,9 @@ object ExtQueries {
     *
     * The md5 signature pass is the expensive part (a crypto hash per token,
     * needed only for oracle portability — production uses xxhash64), so it is
-    * cached per (session, sf) like the tables: the bench's warm-up pass pays
-    * it once and the timed loop measures the band-join + verify, i.e. the
-    * engine, not the verification machinery.
+    * session-cached: the bench's warm-up pass pays it once and the timed
+    * loop measures the band-join + verify, i.e. the engine, not the
+    * verification machinery.
     */
   def q19Simhash(spark: SparkSession, sfDir: String): DataFrame =
     simhashPairs(spark, sfDir).orderBy("id1", "id2")
@@ -372,7 +360,7 @@ object ExtQueries {
     * start from this one sessionize + keyed aggregation.
     */
   private[queries] def sessionIntervals(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "session_intervals") {
+    SessionCache.frame(spark, sfDir, "session_intervals") {
       Events.sessionize(events(spark, sfDir), "user_id", "ts")
         .groupBy(col("user_id"), col("session_id"))
         .agg(count(lit(1)).as("n_events"),
@@ -509,25 +497,32 @@ object ExtQueries {
     * decode a PNG, but it can verify that our decoder reports exactly the
     * geometry that was encoded. n_decoded == n_docs pins zero fallbacks.
     */
-  /** The synthesized PNG corpus is FIXTURE GENERATION (the testdata has no
-    * image column), cached per (session, sf) like the tables so timed paths
-    * measure the decode stage — the engine work under test. Shared by q31
-    * (decode round-trip) and q75 (perceptual dedup).
+  /** A synthesized media corpus, one `item` per document from its
+    * (doc_id, n_chars). This is FIXTURE GENERATION (the testdata has no
+    * media column), session-cached so timed paths measure the decode stage
+    * — the engine work under test.
+    */
+  private def mediaCorpus(spark: SparkSession, sfDir: String, name: String)(
+      item: (Long, Long) => graft.ext.Multimodal.MediaItem)
+      : org.apache.spark.sql.Dataset[graft.ext.Multimodal.MediaItem] = {
+    import spark.implicits._
+    SessionCache.frame(spark, sfDir, name)(
+      docs(spark, sfDir).select(col("doc_id"), col("n_chars")).as[(Long, Long)]
+        .mapPartitions(_.map { case (id, nc) => item(id, nc) }).toDF()
+    ).as[graft.ext.Multimodal.MediaItem]
+  }
+
+  /** The synthesized PNG corpus, shared by q31 (decode round-trip) and q75
+    * (perceptual dedup).
     */
   private def pngCorpus(spark: SparkSession,
-      sfDir: String): org.apache.spark.sql.Dataset[graft.ext.Multimodal.MediaItem] = {
-    import spark.implicits._
-    cached(spark, sfDir, "media_png") {
-      docs(spark, sfDir)
-        .select(col("doc_id"), col("n_chars")).as[(Long, Long)]
-        .mapPartitions(_.map { case (id, nc) =>
-          val w = 16 + (nc % 32).toInt
-          val h = 16 + ((nc / 32) % 32).toInt
-          graft.ext.Multimodal.MediaItem(id, graft.ext.Multimodal.synthesizePng(id, w, h),
-            "image/png")
-        }).toDF()
-    }.as[graft.ext.Multimodal.MediaItem]
-  }
+      sfDir: String): org.apache.spark.sql.Dataset[graft.ext.Multimodal.MediaItem] =
+    mediaCorpus(spark, sfDir, "media_png") { (id, nc) =>
+      val w = 16 + (nc % 32).toInt
+      val h = 16 + ((nc / 32) % 32).toInt
+      graft.ext.Multimodal.MediaItem(id, graft.ext.Multimodal.synthesizePng(id, w, h),
+        "image/png")
+    }
 
   def q31MediaDecode(spark: SparkSession, sfDir: String): DataFrame = {
     val items = pngCorpus(spark, sfDir)
@@ -559,7 +554,7 @@ object ExtQueries {
     * portability; production fingerprints use xxhash64).
     */
   def q32FingerprintDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val fps = cached(spark, sfDir, "fingerprints")(
+    val fps = SessionCache.frame(spark, sfDir, "fingerprints")(
       docs(spark, sfDir).select(col("doc_id"),
         Dedup.portableFingerprint(col("text")).as("fp")))
     Dedup.fingerprintStats(fps)
@@ -654,6 +649,26 @@ object ExtQueries {
 
   // ---- q36 duplicate groups (connected components) --------------------------
 
+  /** Portable-simhash near-dup pair list, cached per (session, sf): the
+    * q36/q60 group engine and q157's multi-signal union both read it.
+    */
+  private[queries] def simhashPairs(spark: SparkSession, sfDir: String): DataFrame =
+    SessionCache.frame(spark, sfDir, "simhash_pairs") {
+      val sigs = simhashes(spark, sfDir)
+      Dedup.simhashNearDuplicatesFromHashes(sigs,
+        maxHamming = 3, bits = 60, bands = 4)
+    }
+
+  /** (id, group_id) connected components over the portable-simhash pair
+    * graph — cached per (session, sf): q36 gates it directly and q60's
+    * near-dup stage consumes the same frame.
+    */
+  private[queries] def dupGroups(spark: SparkSession, sfDir: String): DataFrame =
+    SessionCache.frame(spark, sfDir, "dup_groups") {
+      Dedup.duplicateGroups(
+        simhashPairs(spark, sfDir).select(col("id1"), col("id2")))
+    }
+
   /** Near-duplicate GROUP assignment: connected components over the q19
     * portable-simhash pair graph via distributed min-label propagation; the
     * oracle computes the same transitive closure with a recursive CTE.
@@ -663,27 +678,6 @@ object ExtQueries {
     * scale the same round count amortizes over real per-round work; the
     * iterative cost model is what a 100-TB component step looks like, shrunk.
     */
-  /** (id, group_id) connected components over the portable-simhash pair
-    * graph — cached per (session, sf): q36 gates it directly and q60's
-    * near-dup stage consumes the same frame.
-    */
-  /** Portable-simhash near-dup pair list, cached per (session, sf): the
-    * q36/q60 group engine and q157's multi-signal union both read it.
-    */
-  private[queries] def simhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "simhash_pairs") {
-      val sigs = cached(spark, sfDir, "simhash_portable")(
-        Dedup.simhashPortable(docs(spark, sfDir), "doc_id", "text"))
-      Dedup.simhashNearDuplicatesFromHashes(sigs,
-        maxHamming = 3, bits = 60, bands = 4)
-    }
-
-  private[queries] def dupGroups(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "dup_groups") {
-      Dedup.duplicateGroups(
-        simhashPairs(spark, sfDir).select(col("id1"), col("id2")))
-    }
-
   def q36DupGroups(spark: SparkSession, sfDir: String): DataFrame =
     dupGroups(spark, sfDir).orderBy("id")
 
@@ -714,7 +708,7 @@ object ExtQueries {
     * one quadratic verification scan instead of three.
     */
   private[queries] def cosinePairs04(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "cosine_pairs_04")(
+    SessionCache.frame(spark, sfDir, "cosine_pairs_04")(
       Similarity.cosinePairsExact(emb(spark, sfDir), "vec_id", "embedding", 0.4))
 
   def q37CosinePairs(spark: SparkSession, sfDir: String): DataFrame =
@@ -749,16 +743,11 @@ object ExtQueries {
     * n_decoded == n_docs pins zero quarantine fallbacks.
     */
   def q38AudioDecode(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val items = cached(spark, sfDir, "media_wav") {
-      docs(spark, sfDir)
-        .select(col("doc_id"), col("n_chars")).as[(Long, Long)]
-        .mapPartitions(_.map { case (id, nc) =>
-          graft.ext.Multimodal.MediaItem(id,
-            graft.ext.Multimodal.synthesizeWav(id, 8000, 400 + (nc % 800).toInt),
-            "audio/wav")
-        }).toDF()
-    }.as[graft.ext.Multimodal.MediaItem]
+    val items = mediaCorpus(spark, sfDir, "media_wav") { (id, nc) =>
+      graft.ext.Multimodal.MediaItem(id,
+        graft.ext.Multimodal.synthesizeWav(id, 8000, 400 + (nc % 800).toInt),
+        "audio/wav")
+    }
     val decoded = graft.ext.Multimodal.decodeAudio(items).toDF()
     decoded
       .join(docs(spark, sfDir).select(col("doc_id").as("id"), col("lang")), "id")
@@ -799,10 +788,24 @@ object ExtQueries {
     * functionally dependent on doc_id, so carrying both costs nothing.
     */
   private[queries] def docQuality(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "doc_quality")(
+    SessionCache.frame(spark, sfDir, "doc_quality")(
       docs(spark, sfDir).select(col("doc_id"), col("source"), col("lang"),
         round(TextStats.qualityScore(col("text")), 3).as("q"),
         TextStats.tokenCountSimple(col("text")).cast("long").as("tokens")))
+
+  /** DuckDB twin of [[docQuality]]: the body of the CTE that the oracles
+    * reading per-doc quality interpolate.
+    */
+  private[queries] val docQualitySqlCte: String =
+    """  SELECT doc_id, source, lang,
+      |    ROUND(LEAST(LENGTH(text) / 500.0, 1.0) * 0.4
+      |      + (CASE WHEN (CAST(LENGTH(REPLACE(text, ' ', '')) AS DOUBLE)
+      |                    / (LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1))
+      |               BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.5 END) * 0.4
+      |      + (1.0 - LEAST(CAST(LENGTH(text) - LENGTH(REGEXP_REPLACE(text, '[[:punct:]]', '', 'g')) AS DOUBLE)
+      |                     / GREATEST(LENGTH(text), 1) * 5.0, 1.0)) * 0.2, 3) AS q,
+      |    CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS BIGINT) AS tokens
+      |  FROM documents""".stripMargin
 
   def q39TokenBudget(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docQuality(spark, sfDir)
@@ -921,7 +924,7 @@ object ExtQueries {
   def q43SequencePacking(spark: SparkSession, sfDir: String): DataFrame = {
     val seqLen = 2048L
     // cached: the scan's eager localCheckpoint materializes once per session
-    val off = cached(spark, sfDir, "packing_offsets") {
+    val off = SessionCache.frame(spark, sfDir, "packing_offsets") {
       val toks = docs(spark, sfDir).select(col("doc_id"),
         TextStats.tokenCountSimple(col("text")).cast("long").as("tokens"))
       graft.ext.Curation.withGlobalOffset(toks, "doc_id", "tokens",
@@ -968,8 +971,7 @@ object ExtQueries {
     val d = docs(spark, sfDir)
     // reuse q18's cached per-doc shingle sets (the expensive per-row stage);
     // benchmark/corpus membership is a cheap id join against it
-    val sets = cached(spark, sfDir, "shingle_sets")(
-      Dedup.shingleSets(d, "doc_id", "text", shingleSize = 3))
+    val sets = shingleSets(spark, sfDir)
     val bySource = d.select(col("doc_id").as("id"), col("source"))
     val rep = Dedup.contaminationReportFromSets(
       sets.join(bySource.filter(col("source") =!= "src0"), "id").select("id", "sset"),
@@ -1200,7 +1202,7 @@ object ExtQueries {
     * of its own groupBy over the vocabulary.
     */
   private def corpusTokenCounts(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "corpus_token_counts")(
+    SessionCache.frame(spark, sfDir, "corpus_token_counts")(
       tokenCounts(spark, sfDir).groupBy("t").agg(sum(col("c")).as("cc")))
 
   def q49Zipf(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1242,14 +1244,14 @@ object ExtQueries {
     */
   def q50BloomDecontaminate(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir)
-    val sets5 = cached(spark, sfDir, "shingle_sets_5")(
+    val sets5 = SessionCache.frame(spark, sfDir, "shingle_sets_5")(
       Dedup.shingleSets(d, "doc_id", "text", shingleSize = 5))
     val bySource = d.select(col("doc_id").as("id"), col("source"))
     val benchSets = sets5.join(bySource.filter(col("source") === "src0"), "id")
       .select("id", "sset")
     // the Bloom filter is an input artifact (one benchmark, many probes) —
     // built once per (session, sf) like the signature/shingle caches
-    val bf = cachedArtifact(spark, sfDir, "src0_bloom_5")(
+    val bf = SessionCache.value(spark, sfDir, "src0_bloom_5")(
       Dedup.benchmarkBloomFilter(benchSets))
     val rep = Dedup.bloomContaminationReportFromSets(
       sets5.join(bySource.filter(col("source") =!= "src0"), "id").select("id", "sset"),
@@ -1636,11 +1638,9 @@ object ExtQueries {
     * share ONE execution of the stage chain instead of rebuilding it each.
     */
   private def curationFlags(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "curation_flags") {
-      curationFlagsUncached(spark, sfDir)
-    }
+    SessionCache.frame(spark, sfDir, "curation_flags")(curationFlagFrame(spark, sfDir))
 
-  private def curationFlagsUncached(spark: SparkSession, sfDir: String): DataFrame = {
+  private def curationFlagFrame(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir)
     val toks = d.select(col("doc_id"), col("source"),
       TextStats.tokenCountSimple(col("text")).cast("long").as("tokens"),
@@ -1656,8 +1656,7 @@ object ExtQueries {
     val s2 = wg.join(keep, "gk").filter(col("doc_id") === col("keep_id"))
       .select("doc_id")
 
-    val sets = cached(spark, sfDir, "shingle_sets")(
-      Dedup.shingleSets(d, "doc_id", "text", shingleSize = 3))
+    val sets = shingleSets(spark, sfDir)
     val bySource = d.select(col("doc_id").as("id"), col("source"))
     val flagged = Dedup.contaminationReportFromSets(
       sets.join(bySource.filter(col("source") =!= "src0"), "id").select("id", "sset"),
@@ -1834,7 +1833,7 @@ object ExtQueries {
     * by the q61 ranking and the q93 fusion, cached per (session, sf).
     */
   private def bm25Scored(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "bm25_scored") {
+    SessionCache.frame(spark, sfDir, "bm25_scored") {
       val d = docs(spark, sfDir)
       val k1 = 1.2; val b = 0.75
       // global counts, df, and tf all derive from the shared per-(doc,
@@ -1974,7 +1973,7 @@ object ExtQueries {
     */
   /** Per-(doc, bigram) counts — shared by q65 surprisal and q90 PMI. */
   private def bigramCounts(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "bigram_counts") {
+    SessionCache.frame(spark, sfDir, "bigram_counts") {
       docs(spark, sfDir).select(col("doc_id"), col("source"),
         explode(Dedup.shingles(col("text"), 2)).as("g")) // shingles lowercases
         .groupBy("doc_id", "source", "g").agg(count(lit(1)).as("c"))
@@ -1985,7 +1984,7 @@ object ExtQueries {
     * (PMI numerator) via the session cache.
     */
   private def bigramVocabCounts(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "bigram_vocab")(
+    SessionCache.frame(spark, sfDir, "bigram_vocab")(
       bigramCounts(spark, sfDir).groupBy("g").agg(sum(col("c")).as("c12")))
 
   def q65BigramSurprisal(spark: SparkSession, sfDir: String): DataFrame = {
@@ -2101,17 +2100,12 @@ object ExtQueries {
     * n_decoded == n_docs pins zero quarantine fallbacks.
     */
   def q72VideoMeta(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val items = cached(spark, sfDir, "media_mp4") {
-      docs(spark, sfDir)
-        .select(col("doc_id"), col("n_chars")).as[(Long, Long)]
-        .mapPartitions(_.map { case (id, nc) =>
-          graft.ext.Multimodal.MediaItem(id,
-            graft.ext.Multimodal.synthesizeMp4(id, timescale = 1000,
-              durationUnits = 1000L + nc % 5000, nTracks = 1 + (id % 3).toInt),
-            "video/mp4")
-        }).toDF()
-    }.as[graft.ext.Multimodal.MediaItem]
+    val items = mediaCorpus(spark, sfDir, "media_mp4") { (id, nc) =>
+      graft.ext.Multimodal.MediaItem(id,
+        graft.ext.Multimodal.synthesizeMp4(id, timescale = 1000,
+          durationUnits = 1000L + nc % 5000, nTracks = 1 + (id % 3).toInt),
+        "video/mp4")
+    }
     graft.ext.Multimodal.decodeVideoMeta(items).toDF()
       .join(docs(spark, sfDir).select(col("doc_id").as("id"), col("source")), "id")
       .groupBy("source").agg(
@@ -2168,20 +2162,14 @@ object ExtQueries {
     * at sf0.1); content diversity is what makes pair mining meaningful.
     */
   private def patternPngCorpus(spark: SparkSession,
-      sfDir: String): org.apache.spark.sql.Dataset[graft.ext.Multimodal.MediaItem] = {
-    import spark.implicits._
-    cached(spark, sfDir, "media_png_pattern") {
-      docs(spark, sfDir)
-        .select(col("doc_id"), col("n_chars")).as[(Long, Long)]
-        .mapPartitions(_.map { case (id, nc) =>
-          val w = 16 + (nc % 32).toInt
-          val h = 16 + ((nc / 32) % 32).toInt
-          graft.ext.Multimodal.MediaItem(id,
-            graft.ext.Multimodal.synthesizePatternPng(id, id / 4, w, h),
-            "image/png")
-        }).toDF()
-    }.as[graft.ext.Multimodal.MediaItem]
-  }
+      sfDir: String): org.apache.spark.sql.Dataset[graft.ext.Multimodal.MediaItem] =
+    mediaCorpus(spark, sfDir, "media_png_pattern") { (id, nc) =>
+      val w = 16 + (nc % 32).toInt
+      val h = 16 + ((nc / 32) % 32).toInt
+      graft.ext.Multimodal.MediaItem(id,
+        graft.ext.Multimodal.synthesizePatternPng(id, id / 4, w, h),
+        "image/png")
+    }
 
   /** Pixel-modality dedup in the correctness gate: the aHash perceptual
     * signature of every synthesized PNG ([[graft.ext.Multimodal.perceptualHash]])
@@ -2205,8 +2193,8 @@ object ExtQueries {
     * banded join's post-shuffle distinct/popcount lineage.
     */
   private def phashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "phash_pairs") {
-      val ph = cached(spark, sfDir, "phashes")(
+    SessionCache.frame(spark, sfDir, "phash_pairs") {
+      val ph = SessionCache.frame(spark, sfDir, "phashes")(
         graft.ext.Multimodal.perceptualHashes(patternPngCorpus(spark, sfDir)).toDF())
       Dedup.perceptualNearDuplicatePairs(ph.filter(col("decoded")), maxHamming = 3)
     }
@@ -2315,21 +2303,16 @@ object ExtQueries {
     * n_decoded == n_frames_sampled pins zero quarantine fallbacks.
     */
   def q76FrameSampling(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val items = cached(spark, sfDir, "media_mjpeg") {
-      docs(spark, sfDir)
-        .select(col("doc_id"), col("n_chars")).as[(Long, Long)]
-        .mapPartitions(_.map { case (id, nc) =>
-          val nf = 2 + (id % 4).toInt
-          val w = 16 + (nc % 16).toInt
-          val h = 12 + (id % 8).toInt
-          val frames = (0 until nf).map(f =>
-            graft.ext.Multimodal.synthesizeJpegFrame(id, f, w, h))
-          graft.ext.Multimodal.MediaItem(id,
-            graft.ext.Multimodal.synthesizeMjpegMp4(1000, 1000L * nf, frames, w, h),
-            "video/mp4")
-        }).toDF()
-    }.as[graft.ext.Multimodal.MediaItem]
+    val items = mediaCorpus(spark, sfDir, "media_mjpeg") { (id, nc) =>
+      val nf = 2 + (id % 4).toInt
+      val w = 16 + (nc % 16).toInt
+      val h = 12 + (id % 8).toInt
+      val frames = (0 until nf).map(f =>
+        graft.ext.Multimodal.synthesizeJpegFrame(id, f, w, h))
+      graft.ext.Multimodal.MediaItem(id,
+        graft.ext.Multimodal.synthesizeMjpegMp4(1000, 1000L * nf, frames, w, h),
+        "video/mp4")
+    }
     graft.ext.Multimodal.sampleFrames(items, stride = 2, featureDim = 4).toDF()
       .join(docs(spark, sfDir).select(col("doc_id").as("id"), col("source")), "id")
       .groupBy("source").agg(
@@ -2393,24 +2376,18 @@ object ExtQueries {
     * bit — stay arithmetically replayable.
     */
   private def patternVideoCorpus(spark: SparkSession,
-      sfDir: String): org.apache.spark.sql.Dataset[graft.ext.Multimodal.MediaItem] = {
-    import spark.implicits._
-    cached(spark, sfDir, "media_video_pattern") {
-      docs(spark, sfDir)
-        .select(col("doc_id"), col("n_chars")).as[(Long, Long)]
-        .mapPartitions(_.map { case (id, nc) =>
-          val vk = id / 4
-          val nf = 2 + (vk % 3).toInt
-          val w = 16 + (nc % 32).toInt
-          val h = 16 + ((nc / 32) % 32).toInt
-          val frames = (0 until nf).map(f =>
-            graft.ext.Multimodal.synthesizePatternPng(id, vk * 16 + f, w, h))
-          graft.ext.Multimodal.MediaItem(id,
-            graft.ext.Multimodal.synthesizeMjpegMp4(1000, 1000L * nf, frames, w, h),
-            "video/mp4")
-        }).toDF()
-    }.as[graft.ext.Multimodal.MediaItem]
-  }
+      sfDir: String): org.apache.spark.sql.Dataset[graft.ext.Multimodal.MediaItem] =
+    mediaCorpus(spark, sfDir, "media_video_pattern") { (id, nc) =>
+      val vk = id / 4
+      val nf = 2 + (vk % 3).toInt
+      val w = 16 + (nc % 32).toInt
+      val h = 16 + ((nc / 32) % 32).toInt
+      val frames = (0 until nf).map(f =>
+        graft.ext.Multimodal.synthesizePatternPng(id, vk * 16 + f, w, h))
+      graft.ext.Multimodal.MediaItem(id,
+        graft.ext.Multimodal.synthesizeMjpegMp4(1000, 1000L * nf, frames, w, h),
+        "video/mp4")
+    }
 
   /** Cross-VIDEO near-duplicate detection — the full modality composition:
     * real container walk → real frame decode → perceptual signature per
@@ -2424,7 +2401,7 @@ object ExtQueries {
     * equi-join — never all-pairs over videos.
     */
   def q77VideoNearDup(spark: SparkSession, sfDir: String): DataFrame = {
-    val fp = cached(spark, sfDir, "frame_phashes")(
+    val fp = SessionCache.frame(spark, sfDir, "frame_phashes")(
       graft.ext.Multimodal.framePerceptualHashes(
         patternVideoCorpus(spark, sfDir), stride = 1).toDF())
     val banded = fp.filter(col("decoded")).select(col("id"), col("frameIdx"),
@@ -2559,8 +2536,7 @@ object ExtQueries {
     * shingle strings.
     */
   def q80SourceOverlap(spark: SparkSession, sfDir: String): DataFrame = {
-    val sets = cached(spark, sfDir, "shingle_sets")(
-      Dedup.shingleSets(docs(spark, sfDir), "doc_id", "text", shingleSize = 3))
+    val sets = shingleSets(spark, sfDir)
     val ex = sets
       .join(docs(spark, sfDir).select(col("doc_id").as("id"), col("source")), "id")
       .select(col("source"), explode(col("sset")).as("g"))
@@ -2716,23 +2692,17 @@ object ExtQueries {
     * oracle).
     */
   private def patternWavCorpus(spark: SparkSession,
-      sfDir: String): org.apache.spark.sql.Dataset[graft.ext.Multimodal.MediaItem] = {
-    import spark.implicits._
-    cached(spark, sfDir, "media_wav_pattern") {
-      docs(spark, sfDir)
-        .select(col("doc_id"), col("n_chars")).as[(Long, Long)]
-        .mapPartitions(_.map { case (id, nc) =>
-          val gk = id / 3
-          val base = graft.ext.Multimodal.portableHash60(s"a:$gk") | 1L
-          val key = if (id % 3 == 2) base ^ (1L << (1 + gk % 58).toInt) else base
-          val amp = (4096 * (1 + id % 3)).toShort
-          graft.ext.Multimodal.MediaItem(id,
-            graft.ext.Multimodal.synthesizePatternWav(
-              key, amp, 8000, 1600 + (nc % 97).toInt),
-            "audio/wav")
-        }).toDF()
-    }.as[graft.ext.Multimodal.MediaItem]
-  }
+      sfDir: String): org.apache.spark.sql.Dataset[graft.ext.Multimodal.MediaItem] =
+    mediaCorpus(spark, sfDir, "media_wav_pattern") { (id, nc) =>
+      val gk = id / 3
+      val base = graft.ext.Multimodal.portableHash60(s"a:$gk") | 1L
+      val key = if (id % 3 == 2) base ^ (1L << (1 + gk % 58).toInt) else base
+      val amp = (4096 * (1 + id % 3)).toShort
+      graft.ext.Multimodal.MediaItem(id,
+        graft.ext.Multimodal.synthesizePatternWav(
+          key, amp, 8000, 1600 + (nc % 97).toInt),
+        "audio/wav")
+    }
 
   /** AUDIO-modality near-dup dedup, completing the dedup-per-modality suite
     * (text q18/q19/q47, embeddings q63, images q75, video q77): every WAV is
@@ -2747,8 +2717,8 @@ object ExtQueries {
     * same key string and runs the same band join + popcount verification.
     */
   private def audioPhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "audio_phash_pairs") {
-      val ah = cached(spark, sfDir, "audio_phashes")(
+    SessionCache.frame(spark, sfDir, "audio_phash_pairs") {
+      val ah = SessionCache.frame(spark, sfDir, "audio_phashes")(
         graft.ext.Multimodal.audioPerceptualHashes(
           patternWavCorpus(spark, sfDir)).toDF())
       Dedup.perceptualNearDuplicatePairs(ah.filter(col("decoded")), maxHamming = 3)
@@ -2816,8 +2786,7 @@ object ExtQueries {
     * 100-TB corpus. Panel: per source, how much of the batch survives.
     */
   def q84IncrementalDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val sigs = cached(spark, sfDir, "simhash_portable")(
-      Dedup.simhashPortable(docs(spark, sfDir), "doc_id", "text"))
+    val sigs = simhashes(spark, sfDir)
     val flagged = Dedup.dedupAgainstCorpus(
       sigs.filter(col("id") % 2 === 1), sigs.filter(col("id") % 2 === 0),
       maxHamming = 3, bits = 60, bands = 4)
@@ -2873,7 +2842,7 @@ object ExtQueries {
     * runs once per (session, sf).
     */
   private def copresencePairs(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "copresence_pairs") {
+    SessionCache.frame(spark, sfDir, "copresence_pairs") {
       val sess = sessionIntervals(spark, sfDir)
         .select(col("user_id"), col("start_s").as("s"), col("end_s").as("e"))
       graft.ext.RangeJoin.overlapJoin(
@@ -2944,7 +2913,7 @@ object ExtQueries {
     * the q86 loadings panel and the q88 projection.
     */
   private def pc1Loadings(spark: SparkSession, sfDir: String): Array[Double] =
-    cachedArtifact(spark, sfDir, "pc1_loadings") {
+    SessionCache.value(spark, sfDir, "pc1_loadings") {
       val vecs = emb(spark, sfDir).select(
         transform(col("embedding"), x => x.cast("double")).as("v"))
       graft.ext.Spectral.topLoadings(vecs, "v", d = 64, iters = 3)
@@ -2991,7 +2960,7 @@ object ExtQueries {
     * bench pass — measured ~1 s/pass).
     */
   private def copresenceEdges(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "copresence_edges")(
+    SessionCache.frame(spark, sfDir, "copresence_edges")(
       copresencePairs(spark, sfDir)
         .select(col("u1").as("a"), col("u2").as("b")).distinct())
 
@@ -3384,11 +3353,10 @@ object ExtQueries {
     * and the verified pairs are cached.
     */
   private[queries] def prefixJaccardPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val sets = cached(spark, sfDir, "shingle_sets")(
-      Dedup.shingleSets(docs(spark, sfDir), "doc_id", "text", shingleSize = 3))
-    val idx = cached(spark, sfDir, "q95_prefix_idx")(
+    val sets = shingleSets(spark, sfDir)
+    val idx = SessionCache.frame(spark, sfDir, "q95_prefix_idx")(
       Dedup.jaccardPrefixIndex(sets, threshold = 0.4))
-    cached(spark, sfDir, "q95_pairs")(
+    SessionCache.frame(spark, sfDir, "q95_pairs")(
       Dedup.prefixFilterJaccardPairsFromIndex(idx, sets, threshold = 0.4))
   }
 
@@ -3738,7 +3706,7 @@ object ExtQueries {
     // per-brand counts, and the pair explode — and this ONE keyed shuffle
     // replaces the previous ob-self-equi-join on the basket key, which
     // shuffled the (order, brand) frame twice more.
-    val baskets = cached(spark, sfDir, "q102_baskets")(
+    val baskets = SessionCache.frame(spark, sfDir, "q102_baskets")(
       li.join(broadcast(prt), col("l_partkey") === col("p_partkey"))
         .groupBy(col("o"))
         .agg(sort_array(collect_set(col("p_brand"))).as("bs")))
@@ -3814,7 +3782,7 @@ object ExtQueries {
       .select(col("p_partkey").cast("string").as("s")).distinct()
     // session-cached: the pair frame is consumed twice (pair counts and
     // distinct-string counts) — without the cache the blocking join runs 2×
-    val pairs = cached(spark, sfDir, "q103_ed1_pairs")(
+    val pairs = SessionCache.frame(spark, sfDir, "q103_ed1_pairs")(
       graft.ext.FuzzyJoin.editDistance1Pairs(s, "s", "s")
         .select(length(col("s1")).cast("long").as("len_a"),
           length(col("s2")).cast("long").as("len_b"), col("s1"), col("s2")))
@@ -3866,7 +3834,7 @@ object ExtQueries {
     * sf): q104 summarizes them and q165 joins facts to them at event time.
     */
   private[queries] def runIntervals(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "run_intervals") {
+    SessionCache.frame(spark, sfDir, "run_intervals") {
       val e = events(spark, sfDir)
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       val wOrd = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -4146,7 +4114,7 @@ object ExtQueries {
     */
   def q109RevenueConcentration(spark: SparkSession, sfDir: String): DataFrame = {
     // cached: the rank's eager localCheckpoint materializes once per session
-    val ranked = cached(spark, sfDir, "revenue_rank") {
+    val ranked = SessionCache.frame(spark, sfDir, "revenue_rank") {
       val ord = spark.read.parquet(s"$sfDir/orders.parquet")
       val rev = ord.groupBy(col("o_custkey").as("c"))
         .agg(sum(graft.core.Exprs.roundHalfUpLong(col("o_totalprice") * 100)).as("cents"))
@@ -4918,9 +4886,8 @@ object ExtQueries {
     * cross-engine equality is exact — no float-accumulation order anywhere.
     */
   def q121ShingleNovelty(spark: SparkSession, sfDir: String): DataFrame = {
-    val sets = cached(spark, sfDir, "shingle_sets")(
-      Dedup.shingleSets(docs(spark, sfDir), "doc_id", "text", shingleSize = 3))
-    val ex = cached(spark, sfDir, "shingle_df")(
+    val sets = shingleSets(spark, sfDir)
+    val ex = SessionCache.frame(spark, sfDir, "shingle_df")(
       sets.select(col("id"), explode(col("sset")).as("g"))
         .withColumn("df", count(lit(1)).over(Window.partitionBy("g"))))
     val per = ex.groupBy("id").agg(
@@ -5081,7 +5048,7 @@ object ExtQueries {
     val hops = graft.ext.Graph.bfsHops(e, "a", "b", seed, maxHops = 20)
     // node universe cached too: the union+distinct over the edge list would
     // otherwise re-run per call just to label unreached nodes
-    val nodes = cached(spark, sfDir, "copresence_nodes")(
+    val nodes = SessionCache.frame(spark, sfDir, "copresence_nodes")(
       e.select(col("a").as("node")).union(e.select(col("b"))).distinct())
     nodes.join(hops, Seq("node"), "left")
       .select(coalesce(col("hop"), lit(-1)).as("hop"))

@@ -32,32 +32,25 @@ object Queries {
   def lineitem(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/lineitem.parquet")
 
-  // The returns derivations are shared by every metric query in a run;
-  // cache them once per (session, sf) like a materialized view — the
-  // lineitem scan + groupBy + lag window then executes once, not 23 times.
-  private val retCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), SeriesFrame]
-  private val mktCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** (d, asset, r): per-returnflag daily returns. Projection pruning reaches
-    * the parquet scan (4 of 11 lineitem columns read); the lag window
-    * partitions by asset.
+  /** (d, asset, r): per-returnflag daily returns, shared by every metric
+    * query of a session through [[SessionCache]] like a materialized view:
+    * the lineitem scan + groupBy + lag window executes once, not once per
+    * query. Projection pruning reaches the parquet scan (4 of 11 lineitem
+    * columns read); the lag window partitions by asset.
     */
   def assetReturns(spark: SparkSession, sfDir: String): SeriesFrame =
-    retCache.getOrElseUpdate((spark, sfDir), {
+    SeriesFrame(SessionCache.frame(spark, sfDir, "returns") {
       val rev = lineitem(spark, sfDir)
         .groupBy(to_date(col("l_shipdate")).as("d"), col("l_returnflag").as("asset"))
         .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("rev"))
       val w = Window.partitionBy(col("asset")).orderBy(col("d"))
-      val ret = rev
+      rev
         .select(col("d"), col("asset"), (col("rev") / lag("rev", 1).over(w) - lit(1.0)).as("r"))
         .filter(col("r").isNotNull)
-        .cache()
-      SeriesFrame(ret, Seq("asset"), "d", "r")
-    })
+    }, Seq("asset"), "d", "r")
 
-  /** (d, b): whole-market daily returns (benchmark). The lag window here is
+  /** (d, b): whole-market daily returns (benchmark), session-cached like
+    * [[assetReturns]]. The lag window here is
     * deliberately unpartitioned: it runs AFTER the group-by-day aggregation,
     * on one row per calendar day — a bounded (~10³ rows/decade) single
     * ordered sequence regardless of input scale, not a scale hazard. (Every
@@ -65,15 +58,14 @@ object Queries {
     * audit table in OPTIMIZATION_r14.md lists each site with its row bound.)
     */
   def marketReturns(spark: SparkSession, sfDir: String): DataFrame =
-    mktCache.getOrElseUpdate((spark, sfDir), {
+    SessionCache.frame(spark, sfDir, "market") {
       val rev = lineitem(spark, sfDir)
         .groupBy(to_date(col("l_shipdate")).as("d"))
         .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("rev"))
       rev.select(col("d"),
         (col("rev") / lag("rev", 1).over(Window.orderBy(col("d"))) - lit(1.0)).as("b"))
         .filter(col("b").isNotNull)
-        .cache()
-    })
+    }
 
   // ---- shared derivations (DuckDB SQL) ------------------------------------
 

@@ -37,13 +37,7 @@ import org.apache.spark.sql.functions._
   */
 object Round10Queries {
 
-  import ExtQueries.{cached, events}
-
-  // warehouse tables read UNCACHED on purpose (see Round9Queries: caching a
-  // whole table would substitute an InMemoryRelation into every matching
-  // scan session-wide and kill pruning/pushdown suite-wide)
-  private def tbl(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  import ExtQueries.{events, table}
 
   // ---- q184 priority wait audit (TPC-H Q4 shape) ----------------------------
 
@@ -57,10 +51,10 @@ object Round10Queries {
     * is timestamp arithmetic — exact, no floats anywhere.
     */
   def q184PriorityWait(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = tbl(spark, sfDir, "orders")
+    val o = table(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
         col("o_orderpriority"))
-    val li = tbl(spark, sfDir, "lineitem")
+    val li = table(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_shipdate"))
     o.join(li,
         col("o_orderkey") === col("l_orderkey") &&
@@ -94,15 +88,15 @@ object Round10Queries {
     * are exact BIGINTs in both engines.
     */
   def q185NationPairVolume(spark: SparkSession, sfDir: String): DataFrame = {
-    val nation = tbl(spark, sfDir, "nation").select(col("n_nationkey"), col("n_name"))
-    val supp = tbl(spark, sfDir, "supplier")
+    val nation = table(spark, sfDir, "nation").select(col("n_nationkey"), col("n_name"))
+    val supp = table(spark, sfDir, "supplier")
       .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-    val cust = tbl(spark, sfDir, "customer")
+    val cust = table(spark, sfDir, "customer")
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name").as("cust_nation"))
-    val orders = tbl(spark, sfDir, "orders").select(col("o_orderkey"), col("o_custkey"))
-    val li = tbl(spark, sfDir, "lineitem")
+    val orders = table(spark, sfDir, "orders").select(col("o_orderkey"), col("o_custkey"))
+    val li = table(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"),
         year(col("l_shipdate")).as("ship_year"),
         graft.core.Exprs.roundHalfUpLong(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).as("revc"))
@@ -142,15 +136,15 @@ object Round10Queries {
     * part semi-filter.
     */
   def q186ProductProfit(spark: SparkSession, sfDir: String): DataFrame = {
-    val nation = tbl(spark, sfDir, "nation").select(col("n_nationkey"), col("n_name"))
-    val part = tbl(spark, sfDir, "part")
+    val nation = table(spark, sfDir, "nation").select(col("n_nationkey"), col("n_name"))
+    val part = table(spark, sfDir, "part")
       .filter(col("p_name").contains("red"))
       .select(col("p_partkey"),
         graft.core.Exprs.roundHalfUpLong(col("p_retailprice") * 100).as("retailc"))
-    val supp = tbl(spark, sfDir, "supplier")
+    val supp = table(spark, sfDir, "supplier")
       .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-    val li = tbl(spark, sfDir, "lineitem")
+    val li = table(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         year(col("l_shipdate")).as("ship_year"),
         col("l_quantity").cast("long").as("qty"),
@@ -189,11 +183,11 @@ object Round10Queries {
     * at the cut, so membership is bit-deterministic).
     */
   def q187AboveShareNations(spark: SparkSession, sfDir: String): DataFrame = {
-    val nation = tbl(spark, sfDir, "nation").select(col("n_nationkey"), col("n_name"))
-    val supp = tbl(spark, sfDir, "supplier")
+    val nation = table(spark, sfDir, "nation").select(col("n_nationkey"), col("n_name"))
+    val supp = table(spark, sfDir, "supplier")
       .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-    val li = tbl(spark, sfDir, "lineitem")
+    val li = table(spark, sfDir, "lineitem")
       .select(col("l_suppkey"),
         graft.core.Exprs.roundHalfUpLong(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).as("revc"))
     val perNation = li
@@ -241,12 +235,12 @@ object Round10Queries {
     * flip on float jitter.
     */
   def q188LargeVolumeCustomers(spark: SparkSession, sfDir: String): DataFrame = {
-    val perOrder = tbl(spark, sfDir, "lineitem")
+    val perOrder = table(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity").cast("long").as("qty"),
         graft.core.Exprs.roundHalfUpLong(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).as("revc"))
       .groupBy(col("l_orderkey"))
       .agg(sum(col("qty")).as("oqty"), sum(col("revc")).as("orevc"))
-    val orders = tbl(spark, sfDir, "orders").select(col("o_orderkey"), col("o_custkey"))
+    val orders = table(spark, sfDir, "orders").select(col("o_orderkey"), col("o_custkey"))
     val perCust = perOrder
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey"))
@@ -254,7 +248,7 @@ object Round10Queries {
         sum(col("orevc")).as("revc"))
     val thresh = perCust.agg(
       sum(col("total_qty")).as("all_qty"), count(lit(1)).as("n_cust"))
-    val cust = tbl(spark, sfDir, "customer").select(col("c_custkey"), col("c_name"))
+    val cust = table(spark, sfDir, "customer").select(col("c_custkey"), col("c_name"))
     perCust.crossJoin(broadcast(thresh))
       .filter(col("total_qty") * col("n_cust") > col("all_qty") * lit(2L))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
@@ -290,10 +284,10 @@ object Round10Queries {
     * shuffle; the CASE splits are map-side partial aggregates.
     */
   def q189ShipLagPriorityMix(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = tbl(spark, sfDir, "orders")
+    val o = table(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_orderdate"),
         col("o_orderpriority").isin("1-URGENT", "2-HIGH").cast("long").as("is_hi"))
-    val li = tbl(spark, sfDir, "lineitem").select(col("l_orderkey"), col("l_shipdate"))
+    val li = table(spark, sfDir, "lineitem").select(col("l_orderkey"), col("l_shipdate"))
     li.join(o, col("l_orderkey") === col("o_orderkey"))
       .withColumn("lag_days", datediff(col("l_shipdate"), col("o_orderdate")))
       .withColumn("lag_bucket",
@@ -327,7 +321,7 @@ object Round10Queries {
     * Cached once per (session, sf) like the other shared frames.
     */
   private def hourlySeries(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "hourly_revenue_grid") {
+    SessionCache.frame(spark, sfDir, "hourly_revenue_grid") {
       val ev = events(spark, sfDir).select(col("event_type"),
         floor(col("ts").cast("long") / 3600).cast("long").as("h"),
         graft.core.Exprs.roundHalfUpLong(col("value") * 100).as("cents"))
@@ -612,14 +606,14 @@ object Round10Queries {
     * one scan at sf0.1).
     */
   private def liXY(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "li_xy")(
-      tbl(spark, sfDir, "lineitem")
+    SessionCache.frame(spark, sfDir, "li_xy")(
+      table(spark, sfDir, "lineitem")
         .select(col("l_quantity").cast("long").as("x"),
           graft.core.Exprs.roundHalfUpLong(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).as("y")))
 
   /** (value, cnt, pre) exclusive-prefix rank scan over one liXY column. */
   private def liRankScan(spark: SparkSession, sfDir: String, c: String): DataFrame =
-    cached(spark, sfDir, s"li_rank_$c") {
+    SessionCache.frame(spark, sfDir, s"li_rank_$c") {
       val perV = liXY(spark, sfDir).groupBy(col(c)).agg(count(lit(1)).as("cnt"))
       graft.ext.Curation.withGlobalOffset(perV, c, "cnt", "pre")
     }
@@ -800,9 +794,9 @@ object Round10Queries {
     * aggregate is gone entirely.
     */
   def q196BrownForsythe(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = tbl(spark, sfDir, "lineitem")
+    val li = table(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_returnflag"), col("l_shipdate"))
-    val o = tbl(spark, sfDir, "orders").select(col("o_orderkey"), col("o_orderdate"))
+    val o = table(spark, sfDir, "orders").select(col("o_orderkey"), col("o_orderdate"))
     // r14 (guide §3.1): no join hint — the r13 shuffle_hash hint FORCED a
     // fact exchange of both sides even when the dimension side fits the
     // broadcast threshold. Size-based planning now broadcasts orders at
@@ -998,8 +992,8 @@ object Round10Queries {
     * correlated-subquery pair becomes two map-side-combinable aggs.
     */
   def q198SoleBlameSupplier(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = tbl(spark, sfDir, "orders").select(col("o_orderkey"), col("o_orderdate"))
-    val li = tbl(spark, sfDir, "lineitem")
+    val o = table(spark, sfDir, "orders").select(col("o_orderkey"), col("o_orderdate"))
+    val li = table(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
     // two plain keyed aggs instead of a double countDistinct: the
     // (order, supplier) pre-aggregation makes rows distinct per supplier,
@@ -1030,8 +1024,8 @@ object Round10Queries {
       .agg(count(lit(1)).as("ns"), sum(col("late")).as("nls"),
         max(when(col("late") === 1, col("l_suppkey"))).as("blame"))
       .filter(col("ns") >= 2 && col("nls") === 1)
-    val nation = tbl(spark, sfDir, "nation").select(col("n_nationkey"), col("n_name"))
-    val supp = tbl(spark, sfDir, "supplier")
+    val nation = table(spark, sfDir, "nation").select(col("n_nationkey"), col("n_name"))
+    val supp = table(spark, sfDir, "supplier")
       .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation"))
     perOrder.join(broadcast(supp), col("blame") === col("s_suppkey"))
@@ -1068,13 +1062,13 @@ object Round10Queries {
     * years, not data-sized), partitioned by year.
     */
   def q199TopSupplierPerYear(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = tbl(spark, sfDir, "lineitem")
+    val li = table(spark, sfDir, "lineitem")
       .select(col("l_suppkey"), year(col("l_shipdate")).as("ship_year"),
         graft.core.Exprs.roundHalfUpLong(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).as("revc"))
     val perSY = li.groupBy(col("ship_year"), col("l_suppkey"))
       .agg(sum(col("revc")).as("revc"), count(lit(1)).as("n_items"))
     val wy = Window.partitionBy(col("ship_year"))
-    val supp = tbl(spark, sfDir, "supplier").select(col("s_suppkey"), col("s_name"))
+    val supp = table(spark, sfDir, "supplier").select(col("s_suppkey"), col("s_name"))
     perSY.withColumn("mx", max(col("revc")).over(wy))
       .filter(col("revc") === col("mx"))
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
@@ -1112,7 +1106,7 @@ object Round10Queries {
     * IEEE int64→double in both engines.
     */
   def q200PoissonBootstrap(spark: SparkSession, sfDir: String): DataFrame = {
-    val perOrder = tbl(spark, sfDir, "lineitem")
+    val perOrder = table(spark, sfDir, "lineitem")
       .select(col("l_orderkey"),
         graft.core.Exprs.roundHalfUpLong(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).as("revc"))
       .groupBy(col("l_orderkey")).agg(sum(col("revc")).as("orevc"))
@@ -1193,11 +1187,11 @@ object Round10Queries {
     * order. Also reports the largest single-block influence |θ₍ⱼ₎ − θ̂|.
     */
   def q201NationJackknife(spark: SparkSession, sfDir: String): DataFrame = {
-    val nation = tbl(spark, sfDir, "nation").select(col("n_nationkey"), col("n_name"))
-    val supp = tbl(spark, sfDir, "supplier")
+    val nation = table(spark, sfDir, "nation").select(col("n_nationkey"), col("n_name"))
+    val supp = table(spark, sfDir, "supplier")
       .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name"))
-    val li = tbl(spark, sfDir, "lineitem")
+    val li = table(spark, sfDir, "lineitem")
       .select(col("l_suppkey"), col("l_quantity").cast("long").as("qty"),
         graft.core.Exprs.roundHalfUpLong(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).as("revc"))
     val perNation = li.join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
@@ -1326,7 +1320,7 @@ object Round10Queries {
   def q203LshQualityAudit(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.core.Exprs.bindOnce
     val p = 1000000007L
-    val sigs = cached(spark, sfDir, "portable_minhash_16") {
+    val sigs = SessionCache.frame(spark, sfDir, "portable_minhash_16") {
       val toksRaw = graft.ext.TextStats.tokens(lower(col("text")))
       ExtQueries.docs(spark, sfDir)
         .select(col("doc_id"), toksRaw.as("__t"))
@@ -1465,7 +1459,7 @@ object Round10Queries {
     * k regressors need k(k+3)/2 moments, still one aggregate.
     */
   def q204MultipleRegression(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = tbl(spark, sfDir, "lineitem")
+    val li = table(spark, sfDir, "lineitem")
       .select(col("l_quantity").cast("long").as("q"),
         graft.core.Exprs.roundHalfUpLong(col("l_discount") * 100).as("d"),
         graft.core.Exprs.roundHalfUpLong(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).as("y"))

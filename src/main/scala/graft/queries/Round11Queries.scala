@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Bpe, Curation, TextStats}
-import graft.queries.ExtQueries.{cached, docs}
+import graft.queries.ExtQueries.docs
 
 /** Round-11 queries: exact merge-table BPE token accounting (q208/q209) —
   * the real-tokenizer upgrade over the ~4-chars/token heuristic that q17's
@@ -18,7 +18,7 @@ object Round11Queries {
     * q208 aggregates it by source, q209 runs budget curation over it.
     */
   private def docBpe(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "doc_bpe") {
+    SessionCache.frame(spark, sfDir, "doc_bpe") {
       val d = docs(spark, sfDir)
       d.select(col("doc_id"), col("source"), col("lang"),
           round(TextStats.qualityScore(col("text")), 3).as("q"))

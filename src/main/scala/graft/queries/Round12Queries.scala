@@ -108,7 +108,7 @@ object Round12Queries {
     // explode + profile join runs once per session, and every later consumer
     // (bench re-passes, future doc-level lang joins) reads the materialized
     // doc-level result
-    val preds = ExtQueries.cached(spark, sfDir, "langid_preds")(
+    val preds = SessionCache.frame(spark, sfDir, "langid_preds")(
       LangId.classify(d, "doc_id", col("text")))
     preds
       .join(d.select("doc_id", "lang"), "doc_id")

@@ -366,7 +366,7 @@ object Round13Queries {
     * that makes in-engine training auditable: the trajectory is a pure
     * function of the corpus, not of the partitioning. */
   def q217TrainedLr(spark: SparkSession, sfDir: String): DataFrame = {
-    val feat = lrFeatures(spark, sfDir).cache()
+    val feat = SessionCache.frame(spark, sfDir, "lr_features")(lrFeatures(spark, sfDir))
     val traj = QualityModel.train(feat, 4, LrRate, LrSteps)
     traj.zipWithIndex.map { case (w, i) =>
       QualityModel.evalPanel(feat, w).select(

@@ -18,8 +18,7 @@ import graft.ext.{Dedup, Incremental, Layout, Similarity}
   */
 object Round14Queries {
 
-  private def tbl(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  import ExtQueries.table
 
   // ---- q218 Z-order layout + zone-map pruning audit ---------------------------
 
@@ -50,7 +49,7 @@ object Round14Queries {
     * predicts apply to every future query.
     */
   def q218ZorderPruning(spark: SparkSession, sfDir: String): DataFrame = {
-    val o0 = tbl(spark, sfDir, "orders").select(
+    val o0 = table(spark, sfDir, "orders").select(
       col("o_orderkey").as("k"),
       col("o_custkey").as("c"),
       datediff(col("o_orderdate").cast("date"),
@@ -292,8 +291,8 @@ object Round14Queries {
     * counts, and the estimate bit-for-bit.
     */
   def q219JoinSizeEst(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = tbl(spark, sfDir, "lineitem")
-    val or = tbl(spark, sfDir, "orders")
+    val li = table(spark, sfDir, "lineitem")
+    val or = table(spark, sfDir, "orders")
     val ev = ExtQueries.events(spark, sfDir)
 
     def counts(df: DataFrame, key: String): DataFrame =
@@ -516,8 +515,8 @@ object Round14Queries {
     * keyed lookups a cluster serves from a bucketed/indexed layout).
     */
   def q222IncrementalJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = tbl(spark, sfDir, "orders")
-    val l = tbl(spark, sfDir, "lineitem")
+    val o = table(spark, sfDir, "orders")
+    val l = table(spark, sfDir, "lineitem")
     val cut = o.agg((max(col("o_orderdate")) - expr("INTERVAL 90 DAYS")).as("cut"))
     val oc = o.crossJoin(broadcast(cut))
     val lc = l.crossJoin(broadcast(cut))
@@ -603,7 +602,7 @@ object Round14Queries {
     * columns bit-for-bit.
     */
   def q223EndBiasedEst(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = tbl(spark, sfDir, "lineitem")
+    val li = table(spark, sfDir, "lineitem")
     val ev = ExtQueries.events(spark, sfDir)
 
     def panel(name: String, df: DataFrame, key: String): DataFrame = {

@@ -639,27 +639,20 @@ object Round15Queries {
 
   // ---- registration ---------------------------------------------------------
 
-  // All four report shapes are registered through the per-(session,sf)
-  // cache (the q211 pattern): each full report is ~25 driver-submitted jobs
-  // whose cost is pure scheduler floor at fixture scale, and a session that
-  // touches a report query more than once (Bench's warmup + timed passes)
-  // should pay the battery ONCE — the Verify correctness gate still computes
-  // every cell fresh (one run per session) and hashes it against DuckDB.
-  // r14: q231 (the rf≠0 shape) joins the cache — the cache key carries the
-  // query name, so the rf=0.0001 build is keyed apart from its rf=0
-  // siblings (round-12/13 advice: q231 re-ran the full ~25-job pass set on
-  // every bench touch, 2.5 s vs 0.07 s for the cached shapes, measuring
-  // scheduler floor, not plans).
+  // The four report results are session-cached under their query names:
+  // each full report is ~25 driver-submitted jobs whose cost is scheduler
+  // floor at fixture scale, so a session that runs a report more than once
+  // (Bench's warm-up + timed passes) pays the battery ONCE; Verify still
+  // computes every cell fresh (one run per session).
+  private def cachedResult(name: String, run: (SparkSession, String) => DataFrame) =
+    name -> ((s: SparkSession, dir: String) => SessionCache.frame(s, dir, name)(run(s, dir)))
+
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q227_report_table" -> ((s: SparkSession, dir: String) =>
-      ExtQueries.cached(s, dir, "q227_report_table")(q227ReportTable(s, dir))),
+    cachedResult("q227_report_table", q227ReportTable),
     "q228_asof_align" -> (q228AsofAlign _),
-    "q229_report_multi" -> ((s: SparkSession, dir: String) =>
-      ExtQueries.cached(s, dir, "q229_report_multi")(q229ReportMulti(s, dir))),
-    "q230_report_basic" -> ((s: SparkSession, dir: String) =>
-      ExtQueries.cached(s, dir, "q230_report_basic")(q230ReportBasic(s, dir))),
-    "q231_report_rf" -> ((s: SparkSession, dir: String) =>
-      ExtQueries.cached(s, dir, "q231_report_rf")(q231ReportRf(s, dir))))
+    cachedResult("q229_report_multi", q229ReportMulti),
+    cachedResult("q230_report_basic", q230ReportBasic),
+    cachedResult("q231_report_rf", q231ReportRf))
 
   val oracles: Map[String, String] = Map(
     "q227_report_table" -> q227Sql,

@@ -10,12 +10,12 @@ import graft.ext.Dedup
   * distribution-drift and corpus-growth audits, changepoint detection,
   * batching efficiency, embedding drift, sketch-accuracy measurement, and
   * A/B significance testing — each with a DuckDB oracle replaying the same
-  * arithmetic. Shares [[ExtQueries]]' session caches (`docs`, `docQuality`,
-  * `tokenCounts`) so nothing re-reads or re-tokenizes per query.
+  * arithmetic. Shares [[ExtQueries]]' session-cached `docQuality` and
+  * `tokenCounts` so nothing re-tokenizes per query.
   */
 object Round7Queries {
 
-  import ExtQueries.{cached, docs, docQuality, events, emb, tokenCounts}
+  import ExtQueries.{docs, docQuality, docQualitySqlCte, events, emb, tokenCounts}
 
   // ---- q127 Gopher-style quality-rule audit ---------------------------------
 
@@ -433,7 +433,7 @@ object Round7Queries {
     */
   def q133MinhashAccuracy(spark: SparkSession, sfDir: String): DataFrame = {
     val nPerms = 16
-    val sample = cached(spark, sfDir, "q133_sample_shingles")(
+    val sample = SessionCache.frame(spark, sfDir, "q133_sample_shingles")(
       docs(spark, sfDir).filter(col("doc_id") % 4 === 0)
         .select(col("doc_id"),
           array_distinct(Dedup.shingles(lower(col("text")), 2)).as("s"))
@@ -443,14 +443,14 @@ object Round7Queries {
     val minAggs = (0 until nPerms).map(i =>
       min(conv(substring(md5(concat(lit(s"$i:"), col("g")).cast("binary")),
         1, 15), 16, 10).cast("long")).as(s"m$i"))
-    val sigs = cached(spark, sfDir, "q133_sigs")(
+    val sigs = SessionCache.frame(spark, sfDir, "q133_sigs")(
       sample.select(col("doc_id"), explode(col("s")).as("g"))
         .groupBy("doc_id")
         .agg(minAggs.head, minAggs.tail: _*))
     // the exact-Jaccard pair universe is itself a reusable calibration
     // artifact (sample-bounded): cache it like the signature frames so the
     // inverted-index join runs once per (session, sf)
-    val pairs = cached(spark, sfDir, "q133_pairs") {
+    val pairs = SessionCache.frame(spark, sfDir, "q133_pairs") {
       val ex = sample.select(col("doc_id"), size(col("s")).as("sz"),
         explode(col("s")).as("g"))
       ex.as("x").join(ex.as("y"),
@@ -680,7 +680,7 @@ object Round7Queries {
     * pass + a first-appearance-stable argmax via window rank.
     */
   def q136ModalAlignment(spark: SparkSession, sfDir: String): DataFrame = {
-    val joined = cached(spark, sfDir, "q136_joined")(
+    val joined = SessionCache.frame(spark, sfDir, "q136_joined")(
       docQuality(spark, sfDir).join(
         emb(spark, sfDir).select(col("vec_id").as("doc_id"), col("label")),
         Seq("doc_id")))
@@ -701,24 +701,9 @@ object Round7Queries {
       .orderBy("label")
   }
 
-  /** DuckDB replica of [[graft.ext.TextStats.qualityScore]] over documents —
-    * the same formula the q39 oracle uses (length, word-length band,
-    * punctuation ratio), rounded to 3 like `docQuality`.
-    */
-  private val docQualitySqlCte: String =
-    """dq AS (
-      |  SELECT doc_id, source, lang,
-      |    ROUND(LEAST(LENGTH(text) / 500.0, 1.0) * 0.4
-      |      + (CASE WHEN (CAST(LENGTH(REPLACE(text, ' ', '')) AS DOUBLE)
-      |                    / (LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1))
-      |               BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.5 END) * 0.4
-      |      + (1.0 - LEAST(CAST(LENGTH(text) - LENGTH(REGEXP_REPLACE(text, '[[:punct:]]', '', 'g')) AS DOUBLE)
-      |                     / GREATEST(LENGTH(text), 1) * 5.0, 1.0)) * 0.2, 3) AS q,
-      |    CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS BIGINT) AS tokens
-      |  FROM documents)""".stripMargin
-
   val q136Sql: String =
-    s"""WITH $docQualitySqlCte,
+    s"""WITH dq AS (
+      |$docQualitySqlCte),
       |j AS (
       |  SELECT e.label, dq.lang, dq.tokens, dq.q, dq.doc_id
       |  FROM dq JOIN embeddings e ON dq.doc_id = e.vec_id),
@@ -771,7 +756,8 @@ object Round7Queries {
   }
 
   val q137Sql: String =
-    s"""WITH $docQualitySqlCte,
+    s"""WITH dq AS (
+      |$docQualitySqlCte),
       |b AS (
       |  SELECT LEAST(FLOOR(q * 10), 9) AS bucket, COUNT(*) AS bn,
       |    SUM(tokens) AS bt

@@ -12,26 +12,12 @@ import graft.ext.{Curation, Dedup, Similarity, Splits}
   * per-domain frequency capping, epoch-capped token-budget waterfilling,
   * cross-split span-leakage verification, and length-curriculum staging over
   * the distributed global rank. Every query carries a DuckDB oracle replaying
-  * the identical arithmetic; shared inputs come from [[ExtQueries]]' session
-  * caches (`docs`, `docQuality`, `emb`) so nothing re-reads per query.
+  * the identical arithmetic; shared inputs come from [[ExtQueries]] (`docs`,
+  * and the session-cached `emb` and `docQuality`).
   */
 object Round8Queries {
 
-  import ExtQueries.{cached, docs, docQuality, emb}
-
-  /** The q39/q79 docQuality CTE — per-doc 3-dp quality + whitespace token
-    * count — shared verbatim by the q144 oracle.
-    */
-  private val docQualitySqlCte: String =
-    """  SELECT doc_id, source, lang,
-      |    ROUND(LEAST(LENGTH(text) / 500.0, 1.0) * 0.4
-      |      + (CASE WHEN (CAST(LENGTH(REPLACE(text, ' ', '')) AS DOUBLE)
-      |                    / (LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1))
-      |               BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.5 END) * 0.4
-      |      + (1.0 - LEAST(CAST(LENGTH(text) - LENGTH(REGEXP_REPLACE(text, '[[:punct:]]', '', 'g')) AS DOUBLE)
-      |                     / GREATEST(LENGTH(text), 1) * 5.0, 1.0)) * 0.2, 3) AS q,
-      |    CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS BIGINT) AS tokens
-      |  FROM documents""".stripMargin
+  import ExtQueries.{docs, docQuality, docQualitySqlCte, emb}
 
   // ---- q142 semantic decontamination ---------------------------------------
 
@@ -109,7 +95,7 @@ object Round8Queries {
     val d2 = aggregate(
       zip_with(col("v"), col("cv"), (a, b) => (a - b) * (a - b)),
       lit(0.0), (acc, x) => acc + x)
-    val assign = cached(spark, sfDir, "kmeans_assign") {
+    val assign = SessionCache.frame(spark, sfDir, "kmeans_assign") {
       e.crossJoin(cent)
         .select(col("vec_id"), col("cid"), round(d2, 4).as("d2"))
         .groupBy("vec_id").agg(min(struct(col("d2"), col("cid"))).as("m"))
@@ -289,7 +275,7 @@ object Round8Queries {
   def q146SplitLeakage(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Splits.withSplit(docs(spark, sfDir), "doc_id")
       .select(col("doc_id"), col("lang"), col("split"))
-    val spans = cached(spark, sfDir, "split_spans8") {
+    val spans = SessionCache.frame(spark, sfDir, "split_spans8") {
       Dedup.shingleSets(docs(spark, sfDir), "doc_id", "text", 8)
         .select(col("id").as("doc_id"), explode(col("sset")).as("g"))
     }
@@ -352,7 +338,7 @@ object Round8Queries {
   def q147LengthCurriculum(spark: SparkSession, sfDir: String): DataFrame = {
     // cached: the distributed rank's eager localCheckpoint materializes
     // once per (session, sf) instead of per execution
-    val ranked = cached(spark, sfDir, "length_rank") {
+    val ranked = SessionCache.frame(spark, sfDir, "length_rank") {
       val d = docQuality(spark, sfDir)
         .select(col("doc_id"), col("source"), col("tokens"))
         // packed (tokens, doc_id) order key — PRECONDITION doc_id < 10^7
@@ -690,7 +676,7 @@ object Round8Queries {
     // the swept curve is cached per (session, sf): withGlobalOffset pins its
     // partition assignment with an eager localCheckpoint, which would
     // otherwise re-materialize on every execution of this query
-    val run = cached(spark, sfDir, "concurrency_curve") {
+    val run = SessionCache.frame(spark, sfDir, "concurrency_curve") {
       val per = ExtQueries.sessionIntervals(spark, sfDir)
       val deltas = per
         .select(col("start_s").as("t"), lit(0L).as("bit"), lit(1L).as("d"))

@@ -22,32 +22,7 @@ import org.apache.spark.sql.functions._
   */
 object Round9Queries {
 
-  import ExtQueries.docQuality
-
-  // warehouse tables are read UNCACHED on purpose: caching a whole table
-  // registers an InMemoryRelation that Spark substitutes into EVERY
-  // matching parquet scan session-wide, silently killing column pruning
-  // and filter pushdown for all other lineitem/orders queries (and the
-  // PlanSpec guards that pin them). Each q167-q172 projects/filters at the
-  // scan instead — the shape that matters at 100 TB.
-  private def tbl(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
-
-  /** The q39/q79 docQuality CTE (same text as Round8Queries' private copy —
-    * duplicated so every oracle carries its full self-contained twin).
-    * Declared before the oracle strings that interpolate it: object vals
-    * initialize in declaration order.
-    */
-  private val docQualitySqlCte2: String =
-    """  SELECT doc_id, source, lang,
-      |    ROUND(LEAST(LENGTH(text) / 500.0, 1.0) * 0.4
-      |      + (CASE WHEN (CAST(LENGTH(REPLACE(text, ' ', '')) AS DOUBLE)
-      |                    / (LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1))
-      |               BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.5 END) * 0.4
-      |      + (1.0 - LEAST(CAST(LENGTH(text) - LENGTH(REGEXP_REPLACE(text, '[[:punct:]]', '', 'g')) AS DOUBLE)
-      |                     / GREATEST(LENGTH(text), 1) * 5.0, 1.0)) * 0.2, 3) AS q,
-      |    CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS BIGINT) AS tokens
-      |  FROM documents""".stripMargin
+  import ExtQueries.{docQuality, docQualitySqlCte, table}
 
   // ---- q167 local supplier volume (TPC-H Q5 shape) --------------------------
 
@@ -67,21 +42,21 @@ object Round9Queries {
     * never as a join of facts.
     */
   def q167LocalSupplierVolume(spark: SparkSession, sfDir: String): DataFrame = {
-    val region = tbl(spark, sfDir, "region").filter(col("r_name") === "ASIA")
-    val nation = tbl(spark, sfDir, "nation")
+    val region = table(spark, sfDir, "region").filter(col("r_name") === "ASIA")
+    val nation = table(spark, sfDir, "nation")
       .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey"), col("n_name"))
-    val cust = tbl(spark, sfDir, "customer")
+    val cust = table(spark, sfDir, "customer")
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("c_nationkey"), col("n_name"))
     // ASIA suppliers only: the same-nation predicate plus the customer
     // region filter implies the supplier is in ASIA — applying it here
     // semi-reduces lineitem BEFORE the orderkey shuffle
-    val supp = tbl(spark, sfDir, "supplier")
+    val supp = table(spark, sfDir, "supplier")
       .join(broadcast(nation.select(col("n_nationkey").as("sn_key"))),
         col("s_nationkey") === col("sn_key"))
       .select(col("s_suppkey"), col("s_nationkey"))
-    val orders = tbl(spark, sfDir, "orders")
+    val orders = table(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
     // revenue quantizes to exact cents ROW-LOCALLY (the per-row double
@@ -89,7 +64,7 @@ object Round9Queries {
     // dependent) so the aggregate is an exact integer sum in both engines —
     // the q171 lesson: raw double sums at 1e8+ magnitude jitter past 6-dp
     // rounding under different partition fold orders
-    val li = tbl(spark, sfDir, "lineitem")
+    val li = table(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"),
         graft.core.Exprs.roundHalfUpLong(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).as("revc"))
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
@@ -128,23 +103,23 @@ object Round9Queries {
     * intrinsic cost of the query.
     */
   def q168MarketShare(spark: SparkSession, sfDir: String): DataFrame = {
-    val region = tbl(spark, sfDir, "region").filter(col("r_name") === "EUROPE")
-    val nation = tbl(spark, sfDir, "nation")
+    val region = table(spark, sfDir, "region").filter(col("r_name") === "EUROPE")
+    val nation = table(spark, sfDir, "nation")
       .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey"))
-    val cust = tbl(spark, sfDir, "customer")
+    val cust = table(spark, sfDir, "customer")
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"))
-    val suppNation = tbl(spark, sfDir, "supplier")
-      .join(broadcast(tbl(spark, sfDir, "nation")
+    val suppNation = table(spark, sfDir, "supplier")
+      .join(broadcast(table(spark, sfDir, "nation")
           .select(col("n_nationkey"), col("n_name").as("supp_nation"))),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("supp_nation"))
-    val orders = tbl(spark, sfDir, "orders")
+    val orders = table(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
         year(to_date(col("o_orderdate"))).as("o_year"))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-    val li = tbl(spark, sfDir, "lineitem")
+    val li = table(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"),
         graft.core.Exprs.roundHalfUpLong(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).as("revc"))
     li.join(orders, col("l_orderkey") === col("o_orderkey"))
@@ -187,11 +162,11 @@ object Round9Queries {
     * merge), never a global sort. Deterministic tie-break on custkey.
     */
   def q169ReturnedItems(spark: SparkSession, sfDir: String): DataFrame = {
-    val cust = tbl(spark, sfDir, "customer")
+    val cust = table(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-    val orders = tbl(spark, sfDir, "orders")
+    val orders = table(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
-    val li = tbl(spark, sfDir, "lineitem")
+    val li = table(spark, sfDir, "lineitem")
       .filter(col("l_returnflag") === "R")
       .select(col("l_orderkey"),
         graft.core.Exprs.roundHalfUpLong(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).as("revc"))
@@ -221,9 +196,9 @@ object Round9Queries {
     * ratio in one aggregation pass, grouped by ship month.
     */
   def q170PromoShare(spark: SparkSession, sfDir: String): DataFrame = {
-    val part = tbl(spark, sfDir, "part")
+    val part = table(spark, sfDir, "part")
       .select(col("p_partkey"), col("p_type"))
-    tbl(spark, sfDir, "lineitem")
+    table(spark, sfDir, "lineitem")
       .filter(to_date(col("l_shipdate")).between("1996-01-01", "1996-12-31"))
       .select(col("l_partkey"),
         date_format(to_date(col("l_shipdate")), "yyyy-MM").as("ship_month"),
@@ -266,13 +241,13 @@ object Round9Queries {
     // extendedprice is a 2-dp amount: quantize to exact cents row-locally
     // so the brand sums are exact integers (raw double sums at 1e8+
     // magnitude flipped 6-dp rounding boundaries between engines at sf0.1)
-    val li = tbl(spark, sfDir, "lineitem")
+    val li = table(spark, sfDir, "lineitem")
       .select(col("l_partkey"), col("l_quantity"),
         graft.core.Exprs.roundHalfUpLong(col("l_extendedprice") * 100).as("pricec"))
     val partAvg = li.groupBy("l_partkey")
       .agg(avg(col("l_quantity")).as("avg_qty"))
       .withColumnRenamed("l_partkey", "pk")
-    val part = tbl(spark, sfDir, "part")
+    val part = table(spark, sfDir, "part")
       .select(col("p_partkey"), col("p_brand"))
     li.join(partAvg, col("l_partkey") === col("pk"))
       .filter(col("l_quantity") < lit(0.5) * col("avg_qty"))
@@ -306,9 +281,9 @@ object Round9Queries {
     * carries payloads — only keys and counts.
     */
   def q172OrderFanout(spark: SparkSession, sfDir: String): DataFrame = {
-    val perOrder = tbl(spark, sfDir, "lineitem")
+    val perOrder = table(spark, sfDir, "lineitem")
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("fan"))
-    val orders = tbl(spark, sfDir, "orders").select(col("o_orderkey"))
+    val orders = table(spark, sfDir, "orders").select(col("o_orderkey"))
     perOrder.join(orders, col("l_orderkey") === col("o_orderkey"), "full_outer")
       .select(
         when(col("o_orderkey").isNull, lit(-1L))
@@ -453,7 +428,7 @@ object Round9Queries {
 
   val q174Sql: String =
     s"""WITH d AS (
-       |$docQualitySqlCte2),
+       |$docQualitySqlCte),
        |pq AS (
        |  SELECT q, CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS en_c,
        |    CAST(SUM(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS BIGINT) AS rest_c
@@ -771,7 +746,7 @@ object Round9Queries {
 
   val q178Sql: String =
     s"""WITH d AS (
-       |$docQualitySqlCte2),
+       |$docQualitySqlCte),
        |dm AS (
        |  SELECT doc_id, source, CAST(ROUND(q * 1000) AS BIGINT) AS m FROM d),
        |st AS (
@@ -868,7 +843,7 @@ object Round9Queries {
 
   val q179Sql: String =
     s"""WITH d AS (
-       |$docQualitySqlCte2),
+       |$docQualitySqlCte),
        |psq AS (SELECT source, q, COUNT(*) AS c FROM d GROUP BY 1, 2),
        |pq AS (SELECT q, COUNT(*) AS cg FROM d GROUP BY 1),
        |t AS (SELECT COUNT(*) AS n FROM d),
@@ -977,11 +952,11 @@ object Round9Queries {
     * final divisions.
     */
   def q181RevenueGini(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = tbl(spark, sfDir, "orders")
+    val orders = table(spark, sfDir, "orders")
       .select(col("o_custkey"),
         graft.core.Exprs.roundHalfUpLong(col("o_totalprice") * 100).as("revc"))
       .groupBy("o_custkey").agg(sum(col("revc")).as("revc"))
-    val cust = tbl(spark, sfDir, "customer")
+    val cust = table(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_nationkey"))
       .join(orders, col("c_custkey") === col("o_custkey"), "left")
       .select(col("c_custkey"), col("c_nationkey"),
@@ -1041,13 +1016,13 @@ object Round9Queries {
     * predicate would gate only the empty set).
     */
   def q182CleanSupplierAssortment(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = tbl(spark, sfDir, "lineitem")
+    val li = table(spark, sfDir, "lineitem")
     val tainted = li.groupBy(col("l_suppkey"))
       .agg(sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("nr"),
         count(lit(1)).as("n"))
       .filter(col("nr") * 100L > col("n") * 32L)
       .select(col("l_suppkey"))
-    val part = tbl(spark, sfDir, "part")
+    val part = table(spark, sfDir, "part")
       .select(col("p_partkey"), col("p_brand"), col("p_size"))
     li.select(col("l_partkey"), col("l_suppkey"))
       .join(broadcast(tainted), Seq("l_suppkey"), "left_anti")
@@ -1081,12 +1056,12 @@ object Round9Queries {
     * proves only that two engines agree on an empty set.
     */
   def q183DormantRich(spark: SparkSession, sfDir: String): DataFrame = {
-    val cust = tbl(spark, sfDir, "customer")
+    val cust = table(spark, sfDir, "customer")
     // cents-exact mean: Σcents/n is the same double in both engines
     val avgBal = cust.agg(
       (sum(graft.core.Exprs.roundHalfUpLong(col("c_acctbal") * 100)).cast("double") /
         count(lit(1)).cast("double")).as("avg_balc"))
-    val recentKeys = tbl(spark, sfDir, "orders")
+    val recentKeys = table(spark, sfDir, "orders")
       .filter(col("o_orderdate") >= lit("1999-01-01").cast("date"))
       .select(col("o_custkey")).distinct()
     cust.select(col("c_custkey"), col("c_mktsegment"),

@@ -6,7 +6,7 @@ import graft.core.Exprs
 
 /** r14: `Exprs.roundHalfUpLong` must be bit-identical to Spark's
   * `round(x, 0).cast("long")` (BigDecimal-on-shortest-repr HALF_UP) over
-  * its documented domain |x| < 2^51 — boundary vectors first (exact k.5,
+  * its documented domain |x| <= 2^53 — boundary vectors first (exact k.5,
   * within-half-ulp-below-k.5 where the floor(x+0.5) carry correction
   * fires, shortest-repr oddities), then a deterministic random sweep at
   * the magnitudes the cents/milli quantizations produce.
@@ -32,6 +32,24 @@ class ExprsRoundSpec extends SparkSpec {
       4.499999999999999, 0.9999999999999999, 1e15 + 0.5)
     val base = halves ++ belowHalves ++ aboveHalves ++ reprOddities ++
       Seq(0.0, -0.0, 1.0, 123456789.987, (1L << 50).toDouble + 0.25)
+    check(base ++ base.map(-_))
+  }
+
+  // Above 2^51 the k.5 ties thin out (spacing 0.5 up to 2^52, then every
+  // double is an integer), so the carry correction meets FP ties-to-even in
+  // both `|x| + 0.5` and `t - 0.5`. q225's per-bucket pair-mass summands
+  // reach this range once a histogram bucket holds ~67k events.
+  test("boundary vectors on [2^51, 2^53]") {
+    val p51 = (1L << 51).toDouble
+    val p52 = (1L << 52).toDouble
+    val p53 = (1L << 53).toDouble
+    val anchors = Seq(p51, p51 + 0.5, p51 + 1.0, p51 + 1.5, p52 - 1.5, p52 - 1.0, p52 - 0.5,
+      p52, p52 + 1.0, p52 + 2.0, p52 + 3.0, p53 - 2.0, p53 - 1.0, p53)
+    val around = anchors.flatMap(a => Seq(Math.nextDown(a), a, Math.nextUp(a)))
+      .filter(a => a >= p51 && a <= p53)
+    val rnd = new scala.util.Random(51L)
+    val sweep = Seq.fill(5000)(p51 + rnd.nextDouble() * (p53 - p51))
+    val base = around ++ sweep ++ sweep.map(x => math.floor(x) + 0.5).filter(_ < p52)
     check(base ++ base.map(-_))
   }
 
